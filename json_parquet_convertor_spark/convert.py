@@ -54,19 +54,27 @@ def person_to_parquet_df(df: DataFrame) -> DataFrame:
     )
 
 
+def _converted(
+    spark: SparkSession, src: str, schema: StructType | None
+) -> DataFrame:
+    """A3→A5: read the JSON landing and apply the conversion semantics."""
+    schema = schema or PERSON_JSON_SCHEMA
+    raw = read_json(spark, src, schema=schema, multiline=True, drop_malformed=True)
+    return person_to_parquet_df(raw) if schema is PERSON_JSON_SCHEMA else raw
+
+
 def json_to_parquet(
     spark: SparkSession, src: str, dst: str, schema: StructType | None = None
 ) -> DataFrame:
     """End-to-end A3→A5→A6: read JSON, apply conversion semantics, write
     snappy parquet, return the read-back DataFrame."""
-    schema = schema or PERSON_JSON_SCHEMA
-    raw = read_json(spark, src, schema=schema, multiline=True, drop_malformed=True)
-    converted = person_to_parquet_df(raw) if schema is PERSON_JSON_SCHEMA else raw
+    converted = _converted(spark, src, schema)
     write_parquet(converted, dst, compression="snappy")
     # read-back honors the partial-file policy (r12): our own
     # write is commit-protocol-atomic, but a REUSED dst may carry
-    # foreign dirt (the reference's non-atomic loop leaves exactly that)
-    return read_parquet_policy(spark, dst)
+    # foreign dirt (the reference's non-atomic loop leaves exactly that).
+    # The written schema is known, so the read-back infers nothing.
+    return read_parquet_policy(spark, dst, schema=converted.schema)
 
 
 # The reference's sample inputs (sample_json/person{2,3,4}.json), embedded so
@@ -105,32 +113,33 @@ def json_to_parquet_per_file(
       input file is one write task, so a million files stream through the
       executor pool without driver memory growth.
 
-    Mechanics: tag rows with their source basename (``input_file_name``),
-    ``partitionBy`` that key so each input file's rows land in exactly one
-    leaf directory as exactly one part file (repartition by key first ⇒
-    one task per file), then promote each part file to ``<key>.parquet``
-    with per-file renames — pure metadata ops, same count of FS operations
-    as the reference's one S3 put per file. Returns the read-back frame
-    over the renamed single files."""
+    Mechanics: one Spark job. Tag rows with their source basename
+    (``input_file_name``) and ``partitionBy`` that key. Multi-line JSON is
+    not splittable, so each input file's rows sit in exactly one scan task,
+    and that task writes them as exactly one part file in the key's leaf
+    directory: no exchange, and the scan's tasks write in parallel. Then
+    each part file is promoted to ``<key>.parquet`` by a per-file rename —
+    pure metadata ops, the same count of FS operations as the reference's
+    one S3 put per file. Returns the read-back frame over the renamed
+    single files, read with the written schema (no inference job; an
+    empty landing reads back as an empty frame). Output names are input
+    basenames, so basenames must be unique within one landing (a glob over
+    several directories may repeat one); a repeat raises ``ValueError``
+    before anything is written."""
     import os
     import shutil
+    from collections import Counter
 
-    schema = schema or PERSON_JSON_SCHEMA
-    raw = read_json(
-        spark, src, schema=schema, multiline=True, drop_malformed=True
-    )
-    converted = person_to_parquet_df(raw) if schema is PERSON_JSON_SCHEMA else raw
+    converted = _converted(spark, src, schema)
+    names = Counter(f.rsplit("/", 1)[-1] for f in converted.inputFiles())
+    repeated = sorted(n for n, c in names.items() if c > 1)
+    if repeated:
+        raise ValueError(f"{src}: input basenames repeat: {repeated}")
     keyed = converted.withColumn(
         "_key", F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1)
     )
     staging = dst.rstrip("/") + "__staging"
-    (
-        keyed.repartition("_key")
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .partitionBy("_key")
-        .parquet(staging)
-    )
+    write_parquet(keyed, staging, compression="snappy", partition_by=["_key"])
     os.makedirs(dst, exist_ok=True)
     for leaf in os.listdir(staging):
         if not leaf.startswith("_key="):
@@ -141,13 +150,15 @@ def json_to_parquet_per_file(
             for f in os.listdir(os.path.join(staging, leaf))
             if f.endswith(".parquet")
         ]
-        assert len(parts) == 1, (leaf, parts)
+        if len(parts) != 1:
+            # one scan task per input file is the premise of the layout
+            raise RuntimeError(
+                f"{leaf}: expected one part file per input file, got {parts}"
+            )
         shutil.move(
             os.path.join(staging, leaf, parts[0]),
             os.path.join(dst, f"{key}.parquet"),
         )
     shutil.rmtree(staging)
-    # read-back honors the partial-file policy (r12): our own
-    # write is commit-protocol-atomic, but a REUSED dst may carry
-    # foreign dirt (the reference's non-atomic loop leaves exactly that)
-    return read_parquet_policy(spark, dst)
+    # same policy read-back as json_to_parquet
+    return read_parquet_policy(spark, dst, schema=converted.schema)

@@ -385,7 +385,7 @@ def q_fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
         SELECT doc_id, lang, source,
                (lang IS NULL OR source IS NULL
-                OR regexp_matches(source || lang, '\s')) AS bad
+                OR regexp_matches(source || lang, '\\s')) AS bad
         FROM documents
     )
     SELECT doc_id,

@@ -839,7 +839,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- side's lower() only ever sees ASCII anyway, because URI
         -- already NULLed every non-ASCII host.
         SELECT doc_id,
-               CASE WHEN regexp_matches(raw_url, '\s') THEN NULL
+               CASE WHEN regexp_matches(raw_url, '\\s') THEN NULL
                     -- full java.net.URI hostname alphabet (r13,
                     -- --conflict at sf0.1): '~' version markers are
                     -- RFC-unreserved but not hostname-legal, so Spark's

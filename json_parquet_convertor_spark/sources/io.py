@@ -344,7 +344,9 @@ def quarantine_scan(path: str) -> tuple[list[str], dict[str, str]]:
     return good, bad
 
 
-def read_parquet_policy(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet_policy(
+    spark: SparkSession, path: str, schema: StructType
+) -> DataFrame:
     """``spark.read.parquet`` honoring the partial-file policy.
 
     Default (strict): plain read — corrupt files fail loudly. With
@@ -354,18 +356,26 @@ def read_parquet_policy(spark: SparkSession, path: str) -> DataFrame:
     commit protocol never exposes partial files), so this matters for
     read-backs of REUSED destination directories that may carry foreign
     dirt — the reference's non-atomic loop can leave exactly that
-    (convertor/convertor.go:148-153)."""
+    (convertor/convertor.go:148-153).
+
+    The caller's known ``schema`` skips Spark's footer-inference job, so
+    an empty ``path`` (no visible files) reads as an empty frame under
+    either policy. Under quarantine, a ``path`` whose every file is
+    damaged still raises (see :func:`_quarantine_sources`)."""
     import os
 
+    reader = spark.read.schema(schema)
     if os.environ.get("JPC_FILE_POLICY") == "quarantine":
-        return spark.read.parquet(*_quarantine_sources(path))
-    return spark.read.parquet(path)
+        return reader.parquet(*_quarantine_sources(path, empty_ok=True))
+    return reader.parquet(path)
 
 
-def _quarantine_sources(path: str) -> list[str]:
+def _quarantine_sources(path: str, empty_ok: bool = False) -> list[str]:
     """Probe ``path``; warn about and skip damaged files; raise if nothing
     intact remains (an all-quarantined table is a broken table — reading
-    it as empty would silently zero every downstream aggregate)."""
+    it as empty would silently zero every downstream aggregate). With
+    ``empty_ok``, a path with no visible files has nothing to quarantine
+    and is returned as is, so it reads as under the strict policy."""
     import os
     import warnings
 
@@ -378,12 +388,12 @@ def _quarantine_sources(path: str) -> list[str]:
             ),
             stacklevel=3,
         )
-    if not good:
+    if not good and (bad or not empty_ok):
         raise IOError(
             f"{path}: no readable parquet data files "
             f"({len(bad)} quarantined)"
         )
-    return good
+    return good or [path]
 
 
 def spread(df: DataFrame) -> DataFrame:
